@@ -1554,8 +1554,9 @@ def q_multimodal_decode(spark, sf_dir):
         # length-only "decode" never touches the data bytes), then pure
         # vectorized NumPy arithmetic.
         import numpy as np
+        import pyarrow.compute as pc  # not loaded by `import pyarrow`
 
-        n = pa.compute.binary_length(payload).cast(pa.int64()).to_numpy(
+        n = pc.binary_length(payload).cast(pa.int64()).to_numpy(
             zero_copy_only=False)
         return (
             pa.array(n, pa.int64()),

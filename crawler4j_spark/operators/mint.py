@@ -32,9 +32,12 @@ def mint_docids(
     base_docid: int,
     max_seq: int,
     n_buckets: int = 32,
+    persisted_out: list | None = None,
 ) -> DataFrame:
     """Adds ``docid`` numbered base+1, base+2, ... in (process_seq,
-    within_order) order."""
+    within_order) order. ``persisted_out`` receives the internal cache
+    handle, as in :func:`ordered_rank`, so a loop caller can unpersist it
+    once every consumer of the output has run."""
     df = fresh.withColumn(
         "mint_bucket",
         F.floor((F.col("process_seq") - 1) * n_buckets / F.lit(max(max_seq, 1)))
@@ -49,6 +52,8 @@ def mint_docids(
     # on the 40M-candidate dedup bench at 8 cores (76.8s -> 18.3s for the
     # join+mint phase, identical docids).
     df = df.persist()
+    if persisted_out is not None:
+        persisted_out.append(df)
 
     counts = (
         df.groupBy("mint_bucket").count().orderBy("mint_bucket").collect()

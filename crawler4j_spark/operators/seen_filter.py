@@ -188,6 +188,7 @@ def split_new_vs_maybe_seen(
     blooms: DataFrame | None,
     broadcast_threshold_bytes: int = 256 << 20,
     prebuilt_bitmaps: dict[int, tuple[int, np.ndarray]] | None = None,
+    broadcasts_out: list | None = None,
 ) -> DataFrame:
     """Adds ``maybe_seen: boolean``. No bloom row for a bucket ⇒ nothing of
     that bucket was ever inserted ⇒ definitely new.
@@ -202,6 +203,10 @@ def split_new_vs_maybe_seen(
       12 GB of bitmaps): shuffle candidates to their bucket and join each
       bucket's bitmap in a cogrouped ``applyInPandas`` — one Arrow group
       per bucket, nothing broadcast.
+
+    ``broadcasts_out`` receives the bitmap broadcast, when one is made, so a
+    loop caller can ``destroy()`` it once the probed frame's last job has
+    run instead of leaving it to the JVM GC's ContextCleaner.
 
     CALLER CONTRACT: ``candidates`` should sit behind a materialization
     boundary (parquet read / cached relation), as the engine's staged round
@@ -233,6 +238,8 @@ def split_new_vs_maybe_seen(
             }
     if use_broadcast:
         bc = spark.sparkContext.broadcast(bitmaps)
+        if broadcasts_out is not None:
+            broadcasts_out.append(bc)
 
         # Scalar pandas UDF over exactly three int64 columns: only
         # (bucket, bh1, bh2) cross the Arrow boundary in and one boolean

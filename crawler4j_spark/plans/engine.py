@@ -309,7 +309,8 @@ class CrawlEngine:
 
     _BLOOM_BROADCAST_BYTES = 256 << 20
 
-    def _probe_blooms(self, candidates: DataFrame) -> DataFrame:
+    def _probe_blooms(self, candidates: DataFrame,
+                      broadcasts_out: list | None = None) -> DataFrame:
         """maybe_seen column via the bloom sidecar. While the sidecar fits
         the broadcast threshold, the bitmaps are read straight off the
         local sidecar parquet with pyarrow (UNCOMPRESSED `bits` size via
@@ -325,8 +326,10 @@ class CrawlEngine:
         total = bitmap_bytes_uncompressed(paths)
         if total <= self._BLOOM_BROADCAST_BYTES:
             return split_new_vs_maybe_seen(
-                candidates, None, prebuilt_bitmaps=load_bitmaps(paths))
-        return split_new_vs_maybe_seen(candidates, self._read("seen_bloom"))
+                candidates, None, prebuilt_bitmaps=load_bitmaps(paths),
+                broadcasts_out=broadcasts_out)
+        return split_new_vs_maybe_seen(candidates, self._read("seen_bloom"),
+                                       broadcasts_out=broadcasts_out)
 
     def _parse_rules(self, bodies: DataFrame, fetched_at: int) -> DataFrame:
         """(host, body) -> robots_rules rows via the Arrow-batched parser
@@ -654,7 +657,7 @@ class CrawlEngine:
         updated = (
             frontier.join(rank, key, "left")
             .withColumn("priority", new_priority)
-            .drop("_pr")
+            .select(*frontier.columns)  # frontier column order (one schema id)
         )
         entries = self.store.stage_dataframe(
             updated, stats_cols=["priority", "depth", "docid"])
@@ -961,10 +964,16 @@ class CrawlEngine:
         mark("parse_candidates")
         candidates = self.store.read("candidates_tmp", files=cand_entries)
         n_deduped = sum(e["rows"] for e in cand_entries)
-        candidates = self._probe_blooms(candidates)
+        # the round frees exactly what it creates (never the caller's
+        # cached frames): the probed candidates, mint's internal cache and
+        # the bloom-bitmap broadcast, released once the round's last job ran
+        round_caches: list = []
+        round_broadcasts: list = []
+        candidates = self._probe_blooms(candidates, round_broadcasts)
         # both branches below consume the probed set: persist so the bloom
         # probe (and its upstream) runs once
         candidates = candidates.persist()
+        round_caches.append(candidates)
 
         seen = self._read("seen")
         if seen is not None:
@@ -977,7 +986,8 @@ class CrawlEngine:
             fresh = candidates.drop("maybe_seen")
 
         # --- mint docids in arrival order (J1 hard part) ---
-        minted = mint_docids(fresh, self.last_docid, n_claimed, cfg.mint_buckets)
+        minted = mint_docids(fresh, self.last_docid, n_claimed, cfg.mint_buckets,
+                             persisted_out=round_caches)
         # The slim (url, docid, bucket) projection IS the round's durable
         # artifact — stage it directly as the seen-table delta. This action
         # pays mint's bucket sort once; the gates below recompute the window
@@ -1073,7 +1083,11 @@ class CrawlEngine:
             "frontier", files=[e for e in frontier_files if e["path"] in head_paths])
         new_head_entries: list[dict] = []
         if survivors is not None:
-            remaining = survivors.join(claimed_ids, "docid", "left_anti")
+            # keep the frontier's column order (a join leads with its key):
+            # every frontier file then carries one schema id, so the head
+            # read needs no schema inference and keeps one column order
+            remaining = (survivors.join(claimed_ids, "docid", "left_anti")
+                         .select(*survivors.columns))
             new_head_entries = self.store.stage_dataframe(
                 remaining, stats_cols=["priority", "depth", "docid"])
         untouched = [e for e in frontier_files if e["path"] not in head_paths]
@@ -1165,7 +1179,10 @@ class CrawlEngine:
         }
 
         self.clock = new_clock
-        self.spark.catalog.clearCache()  # drop per-round persisted frames
+        for frame in round_caches:
+            frame.unpersist()
+        for bc in round_broadcasts:
+            bc.destroy()
         replaces = {
             "frontier": frontier_entries,
             "seen_bloom": bloom_entries,

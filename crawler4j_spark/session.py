@@ -73,6 +73,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The engine's session (reused if one is already active).
+
+    ``spark.sql.codegen.cache.maxEntries`` (a static conf, so it only takes
+    effect for a new JVM) is raised from Spark's 100 to 1000: a crawl round
+    needs about 175-180 distinct generated classes, so with the default the
+    least-recently-used classes are evicted before the next round reuses
+    them and every round recompiles about 175 classes with Janino (about
+    0.6 s of driver time per round). 1000 holds a whole round with headroom
+    for the few classes each round adds (round-number literals)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
@@ -95,6 +104,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

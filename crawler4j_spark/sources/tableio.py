@@ -15,7 +15,16 @@ would give it:
 * commits can add files to a table, remove files (e.g. claimed frontier
   files), or replace the table wholesale;
 * manifest ``props`` carry the engine's scalar checkpoint state (round id,
-  docid high-water mark, politeness clock, ...) with per-round lineage.
+  docid high-water mark, politeness clock, ...) with per-round lineage;
+* every staging records the schema it wrote, the Iceberg schema-id analog:
+  the entries carry a content-addressed ``schema_id`` (a hash of the Spark
+  JSON schema, every field nullable as a Parquet read reports it) and the
+  manifest's ``schemas`` map holds id → Spark JSON for exactly the ids that
+  live entries reference. ``read`` hands the recorded schema to the Parquet
+  reader when every requested file carries the same known id, which skips
+  the one-task footer-inference job Spark otherwise launches per read.
+  Entries without an id (stores written before ids existed), mixed ids and
+  ids absent from the map fall back to inference.
 
 At 10^10-row scale the frontier table is bucketed so a claim only rewrites
 the files whose (priority, depth, docid) min/max range overlaps the head of
@@ -25,6 +34,7 @@ per-file stats recorded at write time.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -33,14 +43,32 @@ import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 __all__ = ["SnapshotStore"]
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable — the
+    schema a Parquet read reports for data written with ``dt``."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True,
+                                       f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType),
+                       True)
+    return dt
 
 
 class SnapshotStore:
     def __init__(self, root: str, spark: SparkSession) -> None:
         self.root = root
         self.spark = spark
+        # schema_id -> Spark JSON schema; ids are content hashes, so entries
+        # never go stale and the cache is shared by every snapshot version
+        self._schemas: dict[str, str] = {}
         os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
         os.makedirs(os.path.join(root, "_staging"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
@@ -83,23 +111,40 @@ class SnapshotStore:
     def table_files(self, table: str) -> list[dict]:
         return self.manifest().get("tables", {}).get(table, {}).get("files", [])
 
+    def _recorded_schema(self, entries: list[dict]) -> Optional[StructType]:
+        """The schema every entry was staged with, or None when the entries
+        carry no id, mixed ids, or an id this store cannot resolve (the
+        caller then lets Spark infer it from a footer)."""
+        ids = {e.get("schema_id") for e in entries}
+        if len(ids) != 1 or None in ids:
+            return None
+        (sid,) = ids
+        if sid not in self._schemas:
+            self._schemas.update(self.manifest().get("schemas", {}))
+        js = self._schemas.get(sid)
+        return None if js is None else StructType.fromJson(json.loads(js))
+
     def read(self, table: str, files: Optional[list[dict]] = None,
              merge_schema: bool = False) -> Optional[DataFrame]:
         """DataFrame over the table's current snapshot (or a file subset);
-        None when the table is empty/absent. ``merge_schema=True`` unions
-        the per-file schemas with type WIDENING (columns absent from older
-        files read as null; int columns widened to long where a newer
-        release widened the type, e.g. fetch_log.process_seq in round-5
-        stores vs earlier ones) — used by result views over append-only
-        logs whose schema evolved across releases; costs a footer read per
-        file, so keep it out of the per-round hot path."""
+        None when the table is empty/absent. Files staged with one recorded
+        schema are read without a schema-inference job (module docstring).
+        ``merge_schema=True`` unions the per-file schemas with type
+        WIDENING (columns absent from older files read as null; int columns
+        widened to long where a newer release widened the type, e.g.
+        fetch_log.process_seq in round-5 stores vs earlier ones) — used by
+        result views over append-only logs whose schema evolved across
+        releases; costs a footer read per file, so keep it out of the
+        per-round hot path."""
         entries = self.table_files(table) if files is None else files
         paths = [os.path.join(self.root, e["path"]) for e in entries]
         if not paths:
             return None
         if merge_schema:
             return self._read_merged(table, paths)
-        return self.spark.read.parquet(*paths)
+        schema = self._recorded_schema(entries)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     # promotable atomic types for cross-release schema widening (parquet
     # mergeSchema refuses these, so the merged read handles them itself)
@@ -210,9 +255,13 @@ class SnapshotStore:
     ) -> list[dict]:
         """Write ``df`` to new data files; return manifest entries (not yet
         committed). Computes per-file row counts and min/max stats for
-        ``stats_cols`` from the Parquet footers (no extra scan)."""
+        ``stats_cols`` from the Parquet footers (no extra scan), and tags
+        each entry with the ``schema_id`` of the schema written."""
         import pyarrow.parquet as pq
 
+        schema_json = _as_nullable(df.schema).json()
+        schema_id = hashlib.sha256(schema_json.encode()).hexdigest()[:16]
+        self._schemas[schema_id] = schema_json
         stage = os.path.join(self.root, "_staging", uuid.uuid4().hex)
         df.write.mode("overwrite").parquet(stage)
         try:
@@ -260,7 +309,7 @@ class SnapshotStore:
                     if mins:
                         stats[c] = [min(mins), max(maxs)]
             entries.append({"path": final_name, "rows": meta.num_rows,
-                            "stats": stats})
+                            "stats": stats, "schema_id": schema_id})
         shutil.rmtree(stage, ignore_errors=True)
         return entries
 
@@ -290,9 +339,13 @@ class SnapshotStore:
         new_props = dict(m.get("props", {}))
         if props:
             new_props.update(props)
+        self._schemas.update(m.get("schemas", {}))
+        live_ids = {e["schema_id"] for v in tables.values() for e in v["files"]
+                    if e.get("schema_id") in self._schemas}
         new = {
             "version": m["version"] + 1,
             "tables": tables,
+            "schemas": {sid: self._schemas[sid] for sid in sorted(live_ids)},
             "props": new_props,
             "committed_at": time.time(),
             "lineage": lineage or {},
